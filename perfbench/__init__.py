@@ -1,0 +1,5 @@
+"""Workload benchmark for IceLite and the LLM-pipeline operators.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; see ``perfbench/README.md``.
+"""
